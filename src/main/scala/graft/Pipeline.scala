@@ -52,16 +52,7 @@ class Pipeline(val spark: SparkSession, val wh: Warehouse) {
       val obs = Observation(s"staging-$batchGuid-$t")
       (t, df.observe(obs, F.count(F.lit(1)).as("n")), obs)
     }
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val settled = Await.result(
-        Future.sequence(staged.map { case (t, df, _) =>
-          Future(wh.append(s"$stagingDir/$t", df))
-            .transform(scala.util.Success(_))
-        }), scala.concurrent.duration.Duration(10, "min"))
-      settled.collectFirst { case scala.util.Failure(e) => throw e }
-    }
+    wh.stageAll(staged.map { case (t, df, _) => () => wh.append(s"$stagingDir/$t", df) })
     def observedCount(obs: Observation): Long =
       obs.get("n") match { case n: Number => n.longValue(); case _ => 0L }
     val sp = wh.spark.read.parquet(wh.path(s"$stagingDir/Provider"))
@@ -72,17 +63,15 @@ class Pipeline(val spark: SparkSession, val wh: Warehouse) {
 
     // merge staging → dims (J1-J5), in dependency order, as ONE declared
     // transaction — the boundary the reference gets from SQL Server
-    // (etl_orchestrator.py:168-189). On the base warehouse `atomically` is
-    // pass-through (the documented re-run-converges contract applies,
-    // CrashConsistencySpec); on an AtomicWarehouse a crash mid-merge leaves
-    // every dim at its pre-batch snapshot. Later merges read dims the
-    // earlier replaces wrote, so the transactional view's reads must see
+    // (etl_orchestrator.py:168-189): a crash mid-merge leaves every dim at
+    // its pre-batch snapshot (CrashConsistencySpec). Later merges read dims
+    // the earlier replaces wrote, so the transactional view's reads must see
     // its own staged writes. Each merged frame is consumed exactly once
-    // (replace stages BEFORE swapping/publishing, so the plan's reads of
-    // the old dim stay valid during the write) — no cache/materialize
-    // step; each merge is one job. Staging-table writes stay OUTSIDE the
-    // transaction: they are batch-scoped scratch, deleted at commit and
-    // orphaned (not corrupted) by a crash.
+    // (replace stages BEFORE publishing, so the plan's reads of the old dim
+    // stay valid during the write) — no cache/materialize step; each merge
+    // is one job. Staging-table writes stay OUTSIDE the transaction: they
+    // are batch-scoped scratch, deleted at commit and orphaned (not
+    // corrupted) by a crash.
     wh.atomically { w =>
       val d = dims(w)
       w.replace("dims/UnitOfMeasure",

@@ -143,10 +143,10 @@ class IncrementalAgg(wh: AtomicWarehouse, name: String,
       case _ => aggOf(wh.readAt(srcTable, srcSchema, head))
     }
     wh.atomically { w =>
-      // state and cursor are independent staged writes — concurrent on a
-      // transactional view ([[graft.sources.Warehouse.stageAll]]: the
-      // cursor write is a one-row local relation, so this collapses one
-      // full write wave per refresh), sequential on the base warehouse
+      // state and cursor are independent staged writes — concurrent
+      // ([[graft.sources.Warehouse.stageAll]]: the cursor write is a
+      // one-row local relation, so this collapses one full write wave per
+      // refresh)
       w.stageAll(Seq(
         () => w.replace(stateTable, newState),
         () => w.replace(cursorTable, wh.spark.createDataFrame(

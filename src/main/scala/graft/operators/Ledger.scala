@@ -28,9 +28,10 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * two concurrent pipelines (or a second StreamRunner on the same warehouse)
   * could mint duplicate ids. The reference delegates this to the database's
   * transactionality; here it holds because the driver runs one pipeline and
-  * foreachBatch is sequential. Multi-writer deployments key attempts by
-  * (container, fileName, batchGuid) on a transactional sink instead. Flips
-  * themselves are now append-only and therefore lost-update-free.
+  * foreachBatch is sequential. Appends are not conflict-checked against
+  * each other, so multi-writer deployments key attempts by (container,
+  * fileName, batchGuid) instead. Flips themselves are append-only and
+  * therefore lost-update-free.
   */
 class Ledger(wh: Warehouse) {
   private val table = "ledger/ProcessFile"

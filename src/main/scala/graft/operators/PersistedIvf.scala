@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Transforms
-import graft.sources.Warehouse
+import graft.sources.{AtomicWarehouse, Warehouse}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
@@ -42,7 +42,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType
   * `probeCellLimit` distinct cells the filter is dropped (a full scan beats
   * a 10k-literal predicate).
   */
-class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000) {
+class PersistedIvf(private[graft] val wh: AtomicWarehouse, probeCellLimit: Int = 1000) {
 
   val centroidsTable = "ann/Centroids"
   val assignTable = "ann/CellAssignments"
@@ -251,9 +251,8 @@ class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000)
       val (n, meanCos) = meanCosOf(assigned)
       wh.atomically { w =>
         w.replace(centroidsTable, cents)
-        // a fresh codebook replaces; a reused one is NOT rewritten (its
-        // encode plan reads the very files a replace would overwrite on the
-        // base warehouse)
+        // a fresh codebook replaces; a reused one is unchanged, so it is
+        // not rewritten
         cbNew.foreach { cb =>
           w.replace(pqCodebookTable, cb)
           w.replace(pqMetaTable, wh.spark.createDataFrame(
@@ -292,10 +291,7 @@ class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000)
     * atomic section — the streaming-replay guard ([[graft.streaming.IvfStream]]):
     * a checkpoint retry of an already-committed micro-batch sees its id in the
     * ledger and no-ops instead of double-appending assignment rows (which would
-    * duplicate candidates into every later probe). Exactly-once therefore needs
-    * the admit to be transactional — run streams on an
-    * [[graft.sources.AtomicWarehouse]]; on the base warehouse a crash between
-    * the sequential appends downgrades this to at-least-once.
+    * duplicate candidates into every later probe).
     */
   def addVectorsLedgered(fresh: DataFrame, idCol: String, vecCol: String,
       batchId: Long): Unit =
@@ -328,7 +324,6 @@ class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000)
     try {
       val (n, meanCos, seq) = meanCosAndSeq(assigned)
       wh.atomically { w =>
-        // independent staged writes — concurrent on a transactional view
         w.stageAll(Seq(
           () => w.append(assignTable,
             withCode(withPq(assigned.drop("cos6"), currentCb(), pqResidual(), centroids()))
@@ -402,12 +397,6 @@ class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000)
     else if (!needOut) admit(fresh.get, idCol, vecCol, Some(batchId))
     else if (!needIn) retract(outIds, Some(batchId))
     else {
-      val awh = wh match {
-        case a: graft.sources.AtomicWarehouse => a
-        case _ => throw new IllegalStateException(
-          "applyChangeLedgered needs an AtomicWarehouse — merge-on-read " +
-            "retraction rides deletion vectors")
-      }
       require(wh.exists(centroidsTable), s"$centroidsTable absent — build() first")
       require(wh.exists(statsTable), s"$statsTable absent — build() first")
       val distinct = outIds.distinct
@@ -428,7 +417,7 @@ class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000)
             withCode(withPq(assigned.drop("cos6"), currentCb(), pqResidual(), centroids()))
               .sortWithinPartitions("cell")),
           () => w.append(ingestTable, ledgerRowDf)))
-        val r = awh.deleteWhereDv(assignTable, assignSchema,
+        val r = wh.deleteWhereDv(assignTable, assignSchema,
           Seq(graft.sources.ColIn("id", distinct)), alsoInTx = rest)
         // ids that match no live assignment tombstone nothing, but the
         // admission and both ledger rows must still land — atomically
@@ -457,19 +446,13 @@ class PersistedIvf(private[graft] val wh: Warehouse, probeCellLimit: Int = 1000)
 
   private def retract(ids: Seq[Long], batchId: Option[Long]): Long = {
     require(ids.nonEmpty, "retractVectors with no ids")
-    val awh = wh match {
-      case a: graft.sources.AtomicWarehouse => a
-      case _ => throw new IllegalStateException(
-        "retractVectors needs an AtomicWarehouse — merge-on-read " +
-          "retraction rides deletion vectors")
-    }
     require(wh.exists(statsTable), s"$statsTable absent — build() first")
     val distinct = ids.distinct
     val seq = wh.read(statsTable, statsSchema).agg(max(col("seq"))).head() match {
       case r if r.isNullAt(0) => 1L
       case r => r.getLong(0) + 1L
     }
-    val r = awh.deleteWhereDv(assignTable, assignSchema,
+    val r = wh.deleteWhereDv(assignTable, assignSchema,
       Seq(graft.sources.ColIn("id", distinct)),
       alsoInTx = w => {
         w.append(statsTable, statsRow(seq, "retract", -distinct.size.toLong, None))

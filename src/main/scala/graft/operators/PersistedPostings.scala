@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Warehouse
+import graft.sources.{AtomicWarehouse, Warehouse}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -38,7 +38,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * probe and the IVF probed-cell slice. Above the cap the filter degrades to
   * a broadcast semi-join over a full scan (exact either way).
   */
-class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 1000) {
+class PersistedPostings(private[graft] val wh: AtomicWarehouse, probeTermLimit: Int = 1000) {
 
   val postingsTable = "fts/Postings"
   val statsTable = "fts/CorpusStats"
@@ -150,10 +150,6 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
   /** [[addDocs]] plus a `(batch_id)` ingest-ledger row written in the SAME
     * atomic section: a checkpoint retry of an already-committed micro-batch
     * sees its id and no-ops instead of double-counting every document.
-    * Exactly-once therefore needs the admit to be transactional — run
-    * streams on an [[graft.sources.AtomicWarehouse]]; on the base warehouse
-    * a crash between the sequential appends downgrades this to
-    * at-least-once.
     */
   def addDocsLedgered(fresh: DataFrame, idCol: String, textCol: String,
       batchId: Long): Unit =
@@ -199,8 +195,6 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
             () => w.append(ingestTable, wh.spark.createDataFrame(
               java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(b))), ingestSchema))
           }.toSeq
-        // concurrent on a transactional view, sequential on the base
-        // warehouse (see [[graft.sources.Warehouse.stageAll]])
         w.stageAll(writes)
       }
     } finally toks.unpersist(false)
@@ -299,9 +293,8 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
     * and over-retracting corrupts N exactly as re-admitting double-counts.
     * `ids` is driver-resident and becomes an IN-literal row filter — sized
     * for erasure-request batches (≤ ~100k); larger purges should arrive in
-    * batches, each its own atomic retraction. Requires an
-    * [[graft.sources.AtomicWarehouse]]; [[compact]] folds the tombstones
-    * into clean files when the dead fraction warrants it.
+    * batches, each its own atomic retraction. [[compact]] folds the
+    * tombstones into clean files when the dead fraction warrants it.
     */
   def retractDocs(ids: Seq[Long]): Long = retract(ids, batchId = None)
 
@@ -358,12 +351,6 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
     }
     else if (!needIn) retract(outIds, Some(batchId))
     else {
-      val awh = wh match {
-        case a: graft.sources.AtomicWarehouse => a
-        case _ => throw new IllegalStateException(
-          "applyChangeLedgered needs an AtomicWarehouse — merge-on-read " +
-            "retraction rides deletion vectors")
-      }
       require(wh.exists(statsTable), s"$statsTable absent — build() first")
       val distinct = outIds.distinct
       val toks = tokensOf(fresh.get, idCol, textCol)
@@ -390,7 +377,7 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
           () => w.append(retractTable, ledgerRowDf),
           () => w.append(postingsTable, postingsOfToks(toks).sortWithinPartitions("t")),
           () => w.append(ingestTable, ledgerRowDf)))
-        val r = awh.deleteWhereDv(postingsTable, postingsSchema,
+        val r = wh.deleteWhereDv(postingsTable, postingsSchema,
           Seq(graft.sources.ColIn("id", distinct)), alsoInTx = rest)
         // token-less retractees tombstone nothing, but the stats correction,
         // the admission, and both ledger rows must still land — atomically
@@ -437,12 +424,6 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
     val versions = (retracts.map(_._1) ++ admits.map(_._1)).distinct
     if (versions.isEmpty) return true
     if (anyLedgered(versions)) return false
-    val awh = wh match {
-      case a: graft.sources.AtomicWarehouse => a
-      case _ => throw new IllegalStateException(
-        "applyWindowLedgered needs an AtomicWarehouse — merge-on-read " +
-          "retraction rides deletion vectors")
-    }
     require(wh.exists(statsTable), s"$statsTable absent — build() first")
     import org.apache.spark.sql.types.LongType
     // per-id retract version bounds, driver-side (census-capped sets)
@@ -523,7 +504,7 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
       ).flatten)
       val deleted =
         if (R.isEmpty) 0L
-        else awh.deleteWhereDv(postingsTable, postingsSchema,
+        else wh.deleteWhereDv(postingsTable, postingsSchema,
           Seq(graft.sources.ColIn("id", R)), alsoInTx = rest).deleted
       // token-less retractees tombstone nothing (deleteWhereDv no-ops
       // WITHOUT committing), and an R-less window never calls it — the stats
@@ -574,12 +555,6 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
 
   private def retract(ids: Seq[Long], batchId: Option[Long]): Long = {
     require(ids.nonEmpty, "retractDocs with no ids")
-    val awh = wh match {
-      case a: graft.sources.AtomicWarehouse => a
-      case _ => throw new IllegalStateException(
-        "retractDocs needs an AtomicWarehouse — merge-on-read retraction " +
-          "rides deletion vectors")
-    }
     require(wh.exists(statsTable), s"$statsTable absent — build() first")
     val distinct = ids.distinct
     // ONE fused driver job: Σdl of the retractees + next sequence number
@@ -591,7 +566,7 @@ class PersistedPostings(private[graft] val wh: Warehouse, probeTermLimit: Int = 
       w.append(retractTable, wh.spark.createDataFrame(
         java.util.Arrays.asList(org.apache.spark.sql.Row(Long.box(b))), ingestSchema))
     }
-    val r = awh.deleteWhereDv(postingsTable, postingsSchema,
+    val r = wh.deleteWhereDv(postingsTable, postingsSchema,
       Seq(graft.sources.ColIn("id", distinct)),
       alsoInTx = w => { w.append(statsTable, neg); ledgerRow(w) })
     // a purge of only token-less docs tombstones nothing — the stats

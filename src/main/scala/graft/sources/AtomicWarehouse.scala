@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions.{array, coalesce, col, collect_set, count,
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Transactional warehouse: all-or-nothing visibility for any group of table
-  * writes — the capability the reference gets from SQL Server transactions
-  * around its staging→merge→ledger batch (`core/etl_orchestrator.py:168-189`)
-  * and the base [[Warehouse]] explicitly scopes out as a connector concern.
-  * This is the connector built: a minimal manifest-commit table format
+/** The warehouse: all-or-nothing visibility for any group of table writes —
+  * the capability the reference gets from SQL Server transactions around
+  * its staging→merge→ledger batch (`core/etl_orchestrator.py:168-189`). It
+  * is the only [[Warehouse]] implementation, so every table write in the
+  * engine has this one contract: a minimal manifest-commit table format
   * (the Delta/Iceberg "pointer commit" idea) over plain parquet files.
   *
   * Mechanics:
@@ -27,16 +27,16 @@ import org.apache.spark.util.sketch.BloomFilter
   *     anywhere before the rename leaves every table at its prior
   *     snapshot, across ALL tables in the transaction.
   *   - `truncate` entries apply by table prefix, so `delete("staging/x")`
-  *     hides `staging/x/Provider` exactly like the base warehouse's
-  *     directory delete.
+  *     hides `staging/x/Provider` like a directory delete would.
   *   - Reads inside a transaction see the transaction's own staged writes
   *     (read-your-own-writes) — EP1's merge chain requires it (each merge
   *     reads the dim the previous merge replaced). Unsupported only for
   *     staged PARTITIONED appends (no caller needs it; loud error).
   *   - Tables never written through a manifest (raw `df.write` into
-  *     `wh.path(...)`, e.g. CSV artifacts or ScaleProbe's hand-laid
-  *     indexes) fall back to the base directory read — manifest history
-  *     takes over the first time a table is written through this class.
+  *     `wh.path(...)`, e.g. CSV artifacts or a warehouse laid by an older
+  *     writer) read as their directory's data files — manifest history
+  *     takes over (adopting those files) the first time a table is written
+  *     through this class.
   *
   * Non-goals, documented honestly: single-writer (concurrent committers
   * are detected by the losing rename and retried, but writer isolation is
@@ -371,7 +371,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     visibleFiles(table).map(_.size).getOrElse(-1)
 
   /** Returns None when the table has no manifest history at all (legacy/raw
-    * directory — caller falls back to the base behavior), Some(files)
+    * directory — the caller reads the directory itself), Some(files)
     * otherwise (possibly empty after a truncate).
     */
   private def visibleFiles(table: String): Option[Seq[String]] = {
@@ -988,7 +988,7 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     }
 
     // staged source files are never disturbed by the staged write, so
-    // replace needs none of the base class's tmp-and-swap choreography.
+    // replace needs no tmp-and-swap choreography.
     // Every staged write goes out under PHYSICAL column names (column
     // mapping); the recorded schema line stays logical.
     override def replace(table: String, df: DataFrame): Unit = {
@@ -1066,12 +1066,18 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
       tx.synchronized(tx.entries.exists(e => e.table == table && !e.truncate)) ||
         AtomicWarehouse.this.exists(table)
 
+    // committed state: no caller sizes or schema-probes its own staged writes
+    override def sizeBytes(table: String): Long = AtomicWarehouse.this.sizeBytes(table)
+
+    override def inferSchema(table: String): Option[StructType] =
+      AtomicWarehouse.this.inferSchema(table)
+
     /** Layout rewrites inside an ambient transaction carry the SAME
       * optimistic check as the top-level override: the expected file set
       * rides the ambient commit's precondition. The inherited
       * read-then-replace would otherwise silently truncate away a commit
       * landing before the ambient transaction publishes — the lost-update
-      * hole replaceExpecting closes. (Covers `compact` too: the base class
+      * hole replaceExpecting closes. (Covers `compact` too: [[Warehouse]]
       * routes it through here.)
       */
     override def compactWith(table: String, schema: StructType,
@@ -1083,21 +1089,6 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
     }
 
     override def atomically(fn: Warehouse => Unit): Unit = fn(this)
-
-    /** Concurrent staging — see [[Warehouse.stageAll]]: staged writes are
-      * invisible until the commit, so independent thunks only share the
-      * (synchronized) stage bookkeeping.
-      */
-    override def stageAll(writes: Seq[() => Unit]): Unit = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.util.{Failure, Try}
-      val settled: Seq[Try[Unit]] = Await.result(
-        Future.sequence(writes.map(f => Future(f())
-          .transform(scala.util.Success(_)))),
-        scala.concurrent.duration.Duration(10, "min"))
-      settled.collectFirst { case Failure(e) => throw e }
-    }
   }
 
   // ---- public transactional surface ---------------------------------------
@@ -1350,6 +1341,9 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
 
   override def delete(table: String): Unit =
     retryPinAborts(atomically(_.delete(table)))
+
+  // PHYSICAL, as the class scaladoc's non-goals state
+  override def exists(table: String): Boolean = fs.exists(new Path(path(table)))
 
   override def read(table: String, schema: StructType): DataFrame =
     visibleFiles(table) match {
@@ -4523,11 +4517,11 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
 
   /** Conflict-safe layout rewrite (compaction, Z-order) for ACTIVE tables —
     * what out-of-band maintenance (`tools/Maintain`) against a live stream
-    * requires; `compact` routes through here via the base class. The base
-    * class's rewrite is read-then-replace: a batch append committing between
+    * requires; `compact` and `recluster` route through here. A plain
+    * read-then-replace would lose updates: a batch append committing between
     * the read and the replace's truncate would be silently truncated away
-    * (lost update — the writer-isolation hole the class scaladoc disclaims
-    * for generic transactions). Here the rewrite pins the exact file set it
+    * (the writer-isolation hole the class scaladoc disclaims for generic
+    * transactions). Here the rewrite pins the exact file set it
     * read and commits through [[TxView.replaceExpecting]]'s optimistic
     * check: if the visible set changed, the commit aborts and the compaction
     * retries from the fresh state (Delta/Iceberg-style commit conflict
@@ -4564,14 +4558,16 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
 
   /** Schema from MANIFEST-VISIBLE files only: the raw directory also holds
     * superseded files inside their vacuum grace window, so after a
-    * schema-changing replace the base class's directory inference would hand
-    * maintenance tooling a merged/stale schema (and `Maintain.compact` would
-    * then rewrite the table under it); a truncated-but-unvacuumed table must
-    * report None, not resurrect its dead files' schema.
+    * schema-changing replace a directory inference would hand maintenance
+    * tooling a merged/stale schema (and `Maintain.compact` would then
+    * rewrite the table under it); a truncated-but-unvacuumed table must
+    * report None, not resurrect its dead files' schema. A table without
+    * manifest history infers from its directory.
     */
   override def inferSchema(table: String): Option[StructType] =
     visibleFiles(table) match {
-      case None        => super.inferSchema(table)
+      case None        =>
+        if (exists(table)) Some(spark.read.parquet(path(table)).schema) else None
       case Some(Nil)   => None
       case Some(files) =>
         val phys = spark.read.parquet(files.map(f => s"${path(table)}/$f"): _*).schema
@@ -4585,7 +4581,8 @@ class AtomicWarehouse(spark0: SparkSession, root0: String,
 
   override def sizeBytes(table: String): Long =
     visibleFiles(table) match {
-      case None        => super.sizeBytes(table)
+      case None        =>
+        if (exists(table)) fs.getContentSummary(new Path(path(table))).getLength else 0L
       case Some(files) => fileBytes(table, files)
     }
 

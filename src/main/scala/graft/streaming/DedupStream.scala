@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import graft.sources.Warehouse
+import graft.sources.AtomicWarehouse
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -22,26 +22,11 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType
   *
   * Signatures are computed ONCE per batch and serve both the join and the
   * index append. Idempotency: the Spark checkpoint gives at-most-once file
-  * discovery, and the batch's 4 writes run inside ONE declared
-  * `Warehouse.atomically` section — on an
-  * [[graft.sources.AtomicWarehouse]] the whole batch commits as one
-  * manifest and a crash anywhere leaves the prior snapshot (exactly-once
-  * visibility, AtomicWarehouseSpec). On the BASE warehouse the section is
-  * pass-through and a crash mid-batch can leave a partial batch (same
-  * single-writer, non-transactional contract as
-  * [[graft.operators.Ledger]]). Base recovery contract — AT-LEAST-ONCE
-  * admission, proved adversarially by
-  * CrashConsistencySpec: when the checkpoint replays a partially-admitted
-  * batch, rows may be duplicated in any of the four tables, but the SET of
-  * discovered pairs and admitted documents equals the from-scratch batch run
-  * — candidate `distinct()`, the sig-completeness of `index ∪ freshSigs`,
-  * and set-level downstream consumers (components, survivors) make
-  * duplicates harmless. Consumers must treat `pairs()`/`corpus()` as sets
-  * (or run [[compactAll]]-style maintenance with a dedup rewrite). The
-  * three admit appends run CONCURRENTLY: on a failure the siblings are
-  * awaited to completion before the error propagates, so the partial-batch
-  * window stays the same set of ≤3 tables as the sequential form — only the
-  * completion order within the batch is nondeterministic.
+  * discovery, and the batch's writes (pairs, bloom, and the three admit
+  * appends) run inside ONE `atomically` section: the whole batch commits as
+  * one manifest and a crash anywhere leaves the prior snapshot, so a
+  * checkpoint replay re-runs the batch from clean state (exactly-once
+  * visibility, CrashConsistencySpec).
   *
   * ==Bloom routing==
   * Same lifecycle as [[ExactDedupStream]]'s: once the band table crosses
@@ -50,8 +35,8 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType
   * maintained, since ignoring it would let the state go stale and plant
   * false negatives on re-enable) the
   * stream bootstraps a Bloom filter over its KEYS, persists it as a 1-row
-  * table, and updates it in the same atomic admit (written before the band
-  * append — a crash leaves a superset: extra maybes, never misses). Batches
+  * table, and updates it in the same atomic admit as the band append, so
+  * the filter never misses a committed key. Batches
   * then route through `Dedup.incrementalLshVerifiedPairs(bandBloom = ...)`:
   * bloom-negative fresh band keys (novel content — the common case) skip
   * the corpus probe entirely; pairs are identical at any fpp because the
@@ -64,7 +49,7 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType
   * disables the automatic pass for callers that schedule [[compactAll]] as
   * out-of-band maintenance instead.
   */
-class DedupStream(wh: Warehouse, k: Int = 5, numHashes: Int = 8,
+class DedupStream(wh: AtomicWarehouse, k: Int = 5, numHashes: Int = 8,
     rowsPerBand: Int = 2, minJaccard: Double = 0.5, minSigMatchesOverride: Int = -1,
     compactEvery: Int = 0,
     probeKeyLimit: Int = 1000, pointLookupMaxIds: Int = 1000,
@@ -190,15 +175,9 @@ class DedupStream(wh: Warehouse, k: Int = 5, numHashes: Int = 8,
       probeKeyLimit = keyLim, pointLookupMaxIds = idLim,
       bandBloom = bloomState.map(_._3),
       corpusBandsCarrySigs = true)
-    // the batch's 4 writes form ONE declared transaction: on the base
-    // warehouse this is a plain sequential/concurrent run (the documented
-    // at-least-once contract below applies); on an AtomicWarehouse every
-    // write stages and a single manifest commit makes the whole batch
-    // visible at once — a crash anywhere leaves the prior snapshot, and
-    // the at-least-once caveat upgrades to exactly-once visibility
-    // bloom maintenance BEFORE the admit lands (write-ordering below): the
-    // batch's band keys merge in, with a 2× rebuild from band-table ∪ batch
-    // at saturation so the fpp stays honest as the corpus grows
+    // bloom maintenance: the batch's band keys merge in, with a 2× rebuild
+    // from band-table ∪ batch at saturation so the fpp stays honest as the
+    // corpus grows
     phase("bloom maintenance")
     val newBloomRow = bloomState.map { case (cap, n, bf) =>
       // count + build in ONE pass over the batch keys (the separate
@@ -217,45 +196,27 @@ class DedupStream(wh: Warehouse, k: Int = 5, numHashes: Int = 8,
       }
     }
     try {
-      val isAtomic = wh.isInstanceOf[graft.sources.AtomicWarehouse]
-      wh.atomically { w =>
-      // On the BASE warehouse pairs go FIRST and alone: its plan scans the
-      // index/band/corpus directories, so the admit appends must not land
-      // new files while it runs (a probe that saw the batch's own signatures
-      // would re-emit fresh×fresh pairs through the fresh×corpus path), and
-      // the bloom must land BEFORE the band append (a crash mid-admit leaves
-      // the filter a SUPERSET of the index — extra maybes, never the false
-      // negatives that would lose pairs). On an ATOMIC warehouse both
-      // orderings are moot — reads resolve the pre-transaction manifest
-      // (staged files are invisible) and the commit is all-or-nothing — so
-      // the pairs write joins the concurrent batch and one write-round of
-      // latency disappears from every micro-batch.
-      val pairsWrite = () => { phase("pairs compute+append"); w.append(pairsTable, pairs) }
-      if (!isAtomic) {
-        pairsWrite()
-        newBloomRow.foreach { case (cap, n, bf) =>
-          w.replace(bloomTable, bloomRowDf(cap, n, bf))
-        }
-      }
-      // the admit appends are independent writes of already-persisted
-      // frames (no reads) — staged concurrently on an AtomicWarehouse
-      // ([[graft.sources.Warehouse.stageAll]]) to collapse their job
-      // latencies into one; the per-batch harness overhead is the dominant
-      // cost of small micro-batches
+      // the batch's writes are independent: reads inside the transaction
+      // resolve the pre-transaction manifest (staged files are invisible),
+      // so the pairs plan never sees the batch's own admits, and the commit
+      // is all-or-nothing — all of them stage concurrently
+      // ([[graft.sources.Warehouse.stageAll]]), collapsing their job
+      // latencies into one wave; the per-batch harness overhead is the
+      // dominant cost of small micro-batches
       phase("admit appends")
-      w.stageAll(Seq(
-        // coalesce(1): the spread signature cache is already materialized
-        // (count above), so each admit lands ONE file per table per batch —
-        // the pre-spread layout — instead of one per compute partition
-        () => w.append(indexTable, batchSigs.coalesce(1)),
-        // key-sorted within files so parquet min/max stats stay tight per group
-        () => w.append(bandTable,
-          batchBands.coalesce(1).sortWithinPartitions("key")),
-        () => w.append(corpusTable, batch)) ++
-        (if (isAtomic)
+      wh.atomically { w =>
+        w.stageAll(Seq(
+          () => { phase("pairs compute+append"); w.append(pairsTable, pairs) },
+          // coalesce(1): the spread signature cache is already materialized
+          // (count above), so each admit lands ONE file per table per batch —
+          // the pre-spread layout — instead of one per compute partition
+          () => w.append(indexTable, batchSigs.coalesce(1)),
+          // key-sorted within files so parquet min/max stats stay tight per group
+          () => w.append(bandTable,
+            batchBands.coalesce(1).sortWithinPartitions("key")),
+          () => w.append(corpusTable, batch)) ++
           newBloomRow.map { case (cap, n, bf) =>
-            () => w.replace(bloomTable, bloomRowDf(cap, n, bf)) }.toSeq :+ pairsWrite
-         else Nil))
+            () => w.replace(bloomTable, bloomRowDf(cap, n, bf)) })
       }
       // the committed filter now matches the persisted row — keep it as the
       // state for the next batch (no per-batch re-read)
@@ -341,13 +302,10 @@ class DedupStream(wh: Warehouse, k: Int = 5, numHashes: Int = 8,
     wh.compact(bandTable, bandSchema, targetFiles, sortCols = Seq("key"))
     wh.compact(corpusTable, docSchema, targetFiles)
     wh.compact(pairsTable, pairSchema, targetFiles)
-    // on a transactional warehouse the small-file floor compactEvery bounds
-    // would otherwise reappear as manifest-log growth (4 more manifests per
-    // pass) and superseded-data accretion: fold + collect garbage here
-    wh match {
-      case aw: graft.sources.AtomicWarehouse => aw.vacuum()
-      case _ => ()
-    }
+    // the small-file floor compactEvery bounds would otherwise reappear as
+    // manifest-log growth (4 more manifests per pass) and superseded-data
+    // accretion: fold + collect garbage here
+    wh.vacuum()
   }
 
   /** All near-dup pairs discovered so far. */

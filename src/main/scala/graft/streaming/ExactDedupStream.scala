@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import graft.sources.Warehouse
+import graft.sources.AtomicWarehouse
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -24,13 +24,10 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * what the DuckDB oracle states. ExactDedupStreamSpec proves the invariant
   * directly per batch.
   *
-  * The admit (survivors + their hashes) is one `atomically` section: on an
-  * [[graft.sources.AtomicWarehouse]] a crash can never leave a document
-  * admitted without its hash (which would let a later copy in) or a hash
-  * without its document (which would silently drop content); on the base
-  * warehouse, checkpoint replay of a partial batch re-admits — hash-index
-  * rows may duplicate but the SURVIVOR SET is unchanged (the probe rejects
-  * what the index already has, whichever write survived).
+  * The admit (survivors + their hashes) is one `atomically` section: a
+  * crash can never leave a document admitted without its hash (which would
+  * let a later copy in) or a hash without its document (which would
+  * silently drop content).
   *
   * ==Bloom routing==
   * Once the index crosses `bloomMinIndexBytes` (negative = never bootstrap;
@@ -47,14 +44,12 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * `tools/ScaleProbe` mode `exact_bloom` measures the index I/O drop).
   * The invariant that makes false negatives impossible: every hash in the
   * index was merged into the bloom in the same transaction that appended
-  * it (or preceded the bloom's bootstrap scan). On the base warehouse the
-  * bloom is written FIRST, so a crash mid-admit leaves the bloom a strict
-  * superset — extra maybes, never misses. At saturation (`n_items` >
+  * it (or preceded the bloom's bootstrap scan). At saturation (`n_items` >
   * capacity) the filter is rebuilt at 2× from index ∪ batch, so the fpp
   * stays honest as the corpus grows; a missing/corrupt bloom row just
   * re-bootstraps from the index.
   */
-class ExactDedupStream(wh: Warehouse, probeHashLimit: Int = 1000,
+class ExactDedupStream(wh: AtomicWarehouse, probeHashLimit: Int = 1000,
     compactEvery: Int = 0, bloomMinIndexBytes: Long = 64L << 20,
     bloomFpp: Double = 0.01, bloomInitialCapacity: Long = 1L << 20) {
 
@@ -121,10 +116,6 @@ class ExactDedupStream(wh: Warehouse, probeHashLimit: Int = 1000,
         }
       }
       wh.atomically { w =>
-        // bloom FIRST: on the base warehouse writes land sequentially, and
-        // a crash after this point leaves the bloom a superset (extra
-        // maybes → exact anti-join still correct); the reverse order could
-        // leave indexed hashes missing from the bloom → false negatives
         newBloomRow.foreach { case (cap, n, bf) =>
           w.replace(bloomTable, bloomRowDf(cap, n, bf))
         }
@@ -164,19 +155,13 @@ class ExactDedupStream(wh: Warehouse, probeHashLimit: Int = 1000,
     */
   def retract(ids: Seq[Long]): (Long, Long) = {
     require(ids.nonEmpty, "retract with no ids")
-    val awh = wh match {
-      case a: graft.sources.AtomicWarehouse => a
-      case _ => throw new IllegalStateException(
-        "retract needs an AtomicWarehouse — the atomic two-table purge " +
-          "rides deleteWhereDvAll")
-    }
     val distinct = ids.distinct
     val shas = wh.read(corpusTable, docSchema)
       .filter(col("doc_id").isInCollection(distinct))
       .select(coalesce(sha2(col("text"), 256), lit("__null_text__")).as("text_sha"))
       .distinct().collect().map(_.getString(0)).toSeq
     if (shas.isEmpty) return (0L, 0L)
-    val rs = awh.deleteWhereDvAll(Seq(
+    val rs = wh.deleteWhereDvAll(Seq(
       (corpusTable, docSchema, Seq(graft.sources.ColIn("doc_id", distinct))),
       (indexTable, idxSchema, Seq(graft.sources.ColIn("text_sha", shas)))))
     (rs.head.deleted, rs(1).deleted)
@@ -232,12 +217,9 @@ class ExactDedupStream(wh: Warehouse, probeHashLimit: Int = 1000,
   def compactAll(targetFiles: Int = 1): Unit = {
     wh.compact(indexTable, idxSchema, targetFiles, sortCols = Seq("text_sha"))
     wh.compact(corpusTable, docSchema, targetFiles)
-    // transactional warehouse: also fold the manifest log + collect
-    // superseded files (see DedupStream.compactAll)
-    wh match {
-      case aw: graft.sources.AtomicWarehouse => aw.vacuum()
-      case _ => ()
-    }
+    // also fold the manifest log + collect superseded files (see
+    // DedupStream.compactAll)
+    wh.vacuum()
   }
 
   /** Every admitted (first-arrival-unique) document so far. */

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.PersistedPostings
-import graft.sources.Warehouse
+import graft.sources.AtomicWarehouse
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -21,16 +21,15 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * `(batch_id)` ingest-ledger row lands in the SAME atomic section as the
   * postings + stats appends, so a checkpoint retry of a committed batch
   * no-ops. Without it, a replay double-counts every document — tf/df/N all
-  * inflate and every later [[PersistedPostings.query]] mis-scores. Run on
-  * an [[graft.sources.AtomicWarehouse]] for the exactly-once contract (the
-  * dedup/IVF streams' arrangement); FtsStreamSpec proves replay-noop and
+  * inflate and every later [[PersistedPostings.query]] mis-scores.
+  * Exactly-once, the dedup/IVF streams' contract; FtsStreamSpec proves replay-noop and
   * stream-ingest ≡ batch-ingest bit-identically.
   *
   * The index must exist before the stream starts ([[PersistedPostings
   * .build]] — on the genesis corpus or an empty frame), the
   * [[IvfStream]] contract: admits need the stats table to sequence against.
   */
-class FtsStream(wh: Warehouse, idCol: String = "doc_id",
+class FtsStream(wh: AtomicWarehouse, idCol: String = "doc_id",
     textCol: String = "text") {
 
   val fts = new PersistedPostings(wh)

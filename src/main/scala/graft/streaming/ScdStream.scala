@@ -18,9 +18,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * ==Replay idempotency==
   * The history replace and a `(batch_id)` ingest-ledger row publish in the
-  * SAME atomic section ([[graft.sources.AtomicWarehouse]] for the
-  * exactly-once contract — the [[IvfStream]] arrangement): a checkpoint
-  * retry of a committed micro-batch sees its id in the ledger and no-ops.
+  * SAME atomic section (exactly-once — the [[IvfStream]] arrangement): a
+  * checkpoint retry of a committed micro-batch sees its id in the ledger
+  * and no-ops.
   * SCD2 has a second, semantic safety net the other indexes lack: a replay
   * that somehow re-applied an identical batch would change nothing anyway
   * (identical attributes are the upsert's no-op case) — but it would burn a

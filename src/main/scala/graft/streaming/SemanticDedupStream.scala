@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.Transforms
 import graft.operators.Similarity
-import graft.sources.Warehouse
+import graft.sources.AtomicWarehouse
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -41,16 +41,11 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, 
   *
   * ==Replay idempotency==
   * The admit (index append + survivors append + `(batch_id)` ledger row) is
-  * one `atomically` section; a checkpoint retry of a committed batch sees
-  * its ledger row and no-ops. Run on an
-  * [[graft.sources.AtomicWarehouse]] for exactly-once (the other streams'
-  * arrangement); on the base warehouse a mid-admit crash downgrades to
-  * at-least-once — index/survivor ROWS may duplicate on replay but the
-  * survivor SET is crash-free-exact, because a partially-admitted batch's
-  * ghost index rows carry the batch's own ids and the probe excludes
-  * same-id matches (CrashConsistencySpec).
+  * one `atomically` section, so a crash leaves the prior snapshot and the
+  * checkpoint replay re-runs the batch (CrashConsistencySpec); a retry of a
+  * committed batch sees its ledger row and no-ops — exactly-once.
   */
-class SemanticDedupStream(wh: Warehouse, minCosine: Double,
+class SemanticDedupStream(wh: AtomicWarehouse, minCosine: Double,
     probeCellLimit: Int = 1000, idCol: String = "vec_id",
     vecCol: String = "embedding") {
 
@@ -247,12 +242,8 @@ class SemanticDedupStream(wh: Warehouse, minCosine: Double,
         when(col("n_a") === 0 || col("n_b") === 0, lit(0.0))
           .otherwise(Transforms.vecDot(col("v_a"), col("v_b"))
             / (col("n_a") * col("n_b"))), 6)
-      // id_b =!= id_a: ids are unique corpus-wide, so an index row with the
-      // BATCH's own id can only be this batch's partially-admitted ghost
-      // from a crashed base-warehouse attempt — without the exclusion a
-      // checkpoint replay would drop the whole batch against itself
-      // (CrashConsistencySpec pins the replay; AtomicWarehouse makes the
-      // window impossible in the recommended arrangement)
+      // id_b =!= id_a: ids are unique corpus-wide, so an index row with a
+      // batch vector's own id is that vector, never its neighbour
       val dropped = near(assigned, idx).filter(col("id_b") =!= col("id_a"))
         .filter(cos6 >= minCosine)
         .select(col("id_a").as("id"))
@@ -297,10 +288,7 @@ class SemanticDedupStream(wh: Warehouse, minCosine: Double,
   def compactAll(targetFiles: Int = 1): Unit = {
     wh.compact(indexTable, indexSchema, targetFiles, sortCols = Seq("cell"))
     wh.compact(survivorsTable, survivorSchema, targetFiles)
-    wh match {
-      case aw: graft.sources.AtomicWarehouse => aw.vacuum()
-      case _ => ()
-    }
+    wh.vacuum()
   }
 
   /** Watch `dir` for parquet embedding files (idCol, vecCol); see

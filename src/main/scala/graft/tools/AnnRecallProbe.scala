@@ -85,7 +85,7 @@ object AnnRecallProbe {
     // (mean assignment cosine vs training mean) flags it, and retrain()
     // recovers it. Ground truth is brute force over the grown corpus.
     locally {
-      val wh = new graft.sources.Warehouse(spark,
+      val wh = new graft.sources.AtomicWarehouse(spark,
         Files.createTempDirectory("graft-annp-").toString)
       val ivf = new graft.operators.PersistedIvf(wh)
       val queries = base.orderBy("vec_id").limit(nQueries)
@@ -122,7 +122,7 @@ object AnnRecallProbe {
     // Candidate sets are identical across rungs (the coarse quantizer stays
     // float-exact), so the delta is purely the fine-scoring approximation.
     locally {
-      val wh = new graft.sources.Warehouse(spark,
+      val wh = new graft.sources.AtomicWarehouse(spark,
         Files.createTempDirectory("graft-annrung-").toString)
       val ivf = new graft.operators.PersistedIvf(wh)
       val queries = base.orderBy("vec_id").limit(nQueries)
@@ -197,7 +197,7 @@ object AnnRecallProbe {
         val truth = keyset(Similarity.bruteForceTopK(
           c, queries, "vec_id", "vec_id", "embedding", k))
         Seq(false, true).foreach { residual =>
-          val wh = new graft.sources.Warehouse(spark,
+          val wh = new graft.sources.AtomicWarehouse(spark,
             Files.createTempDirectory(s"graft-annres-").toString)
           val ivf = new graft.operators.PersistedIvf(wh)
           ivf.buildWith(c, "vec_id", "embedding", cents,

@@ -1,13 +1,12 @@
 package graft.tools
 
 import graft.GraftSession
-import graft.sources.{AtomicWarehouse, Warehouse}
+import graft.sources.AtomicWarehouse
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Warehouse maintenance entry point — the ops command an always-on
-  * deployment schedules between (or alongside, on the transactional
-  * warehouse) stream micro-batches:
+  * deployment schedules between or alongside stream micro-batches:
   *
   *   sbt "runMain graft.tools.Maintain <root> [table[:sortCol] ...]"
   *   table spec:  t            compact to one file
@@ -31,11 +30,13 @@ import org.apache.spark.sql.SparkSession
   * directory under the root) it compacts the accumulated per-batch small
   * files into one, re-sorted by `sortCol` when given (index tables whose
   * point-probe pruning rides on tight per-row-group min/max stats must NOT
-  * be concatenated back together — see Warehouse.compact). If the root has
-  * a `_txlog`, the warehouse is opened as an [[AtomicWarehouse]] and the
-  * pass finishes with [[AtomicWarehouse.vacuum]]: fold the manifest log to
-  * one snapshot and collect superseded/orphaned data files past the grace
-  * window (SPARK_GRAFT_VACUUM_GRACE_MS, default 1 h).
+  * be concatenated back together — see Warehouse.compact). Every rewrite is
+  * an [[AtomicWarehouse]] conflict-checked commit, so a writer racing the
+  * pass never loses a commit; a directory laid without manifest history is
+  * adopted by its first rewrite. The pass finishes with
+  * [[AtomicWarehouse.vacuum]]: fold the manifest log to one snapshot and
+  * collect superseded/orphaned data files past the grace window
+  * (SPARK_GRAFT_VACUUM_GRACE_MS, default 1 h).
   *
   * Streams do their own inline maintenance (`compactEvery` + vacuum, commit
   * auto-fold); this tool is for warehouses whose writers don't — or for
@@ -56,17 +57,7 @@ object Maintain {
   def run(spark: SparkSession, root: String, tableSpecs: Seq[String],
       graceMs: Long = 3600000L): Unit = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Transactional sniff: `_txlog` OR `txstage` — a transactional writer
-    // creates its stage dir BEFORE its first manifest publish, and opening a
-    // mid-bootstrap warehouse as a base one is how an ops pass once DESTROYED
-    // data (observed): base compact is a directory-swap replace, which
-    // physically deletes the raw tx- files the writer's racing first commit
-    // was about to reference — no conflict check can see it because the base
-    // path bypasses the manifest protocol entirely.
-    val wh: Warehouse =
-      if (fs.exists(new Path(s"$root/_txlog")) || fs.exists(new Path(s"$root/txstage")))
-        new AtomicWarehouse(spark, root)
-      else new Warehouse(spark, root)
+    val wh = new AtomicWarehouse(spark, root)
 
     // per-table action: plain compact, sorted compact, or z-order re-layout
     sealed trait Action
@@ -95,33 +86,16 @@ object Maintain {
       }
       else discoverTables(fs, root).map((_, Plain: Action))
 
-    // Belt to the sniff's braces: in base mode, refuse any table holding
-    // tx-prefixed files — those names only ever come from manifest commits,
-    // so their presence proves a transactional writer raced the sniff
-    // (its txstage/_txlog appeared after we looked). Base-compacting such a
-    // table would delete files a manifest references.
-    def hasManifestFiles(table: String): Boolean = {
-      val d = new Path(wh.path(table))
-      fs.exists(d) && fs.listStatus(d).exists(_.getPath.getName.startsWith("tx-"))
-    }
-    val isBase = !wh.isInstanceOf[AtomicWarehouse]
-
     specs.foreach { case (table, action0) =>
       // a declared-cluster table must not be flattened by the default pass:
       // plain compact (coalesce-to-one, unsorted) would erase the band
       // layout the manifest says the table relies on — honor the
       // declaration by reclustering instead
-      val action = (action0, wh) match {
-        case (Plain, aw: AtomicWarehouse) =>
-          aw.clusterBy(table) match {
-            case Some(cols) => Recluster(cols, 16)
-            case None => Plain
-          }
+      val action = action0 match {
+        case Plain => wh.clusterBy(table).map(Recluster(_, 16)).getOrElse(Plain)
         case _ => action0
       }
-      if (isBase && hasManifestFiles(table)) {
-        println(s"MAINTAIN skipped $table (transactional writer bootstrapping; rerun)")
-      } else wh.inferSchema(table) match {
+      wh.inferSchema(table) match {
         case None => println(s"MAINTAIN skip $table (absent/empty)")
         case Some(schema) =>
           val before = wh.sizeBytes(table)
@@ -152,12 +126,8 @@ object Maintain {
           }
       }
     }
-    wh match {
-      case aw: AtomicWarehouse =>
-        aw.vacuum(olderThanMs = graceMs)
-        println(s"MAINTAIN vacuumed (log folded; grace ${graceMs / 1000} s)")
-      case _ => ()
-    }
+    wh.vacuum(olderThanMs = graceMs)
+    println(s"MAINTAIN vacuumed (log folded; grace ${graceMs / 1000} s)")
   }
 
   /** Every directory under `root` that directly holds parquet files — the

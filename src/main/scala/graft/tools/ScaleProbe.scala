@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import graft.GraftSession
 import graft.operators.Dedup
-import graft.sources.Warehouse
+import graft.sources.AtomicWarehouse
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
@@ -106,7 +106,7 @@ object ScaleProbe {
 
     if (section == "all" || section == "dedup") scales.foreach { n =>
       val whDir = Files.createTempDirectory(s"graft-scaleprobe-x$n-").toString
-      val wh = new Warehouse(spark, whDir)
+      val wh = new AtomicWarehouse(spark, whDir)
       // rowsPerBand = 4 (2 bands of 4 minhashes): at corpus scale the band
       // width is what keeps BUCKET COLLISIONS sparse — 2-minhash bands
       // random-collide often enough at 500k docs that the candidate-id tail
@@ -276,7 +276,7 @@ object ScaleProbe {
         // the scan measurement, cell COUNT is what scales the claim
         val cents = corpus.orderBy("vec_id").limit(cells)
           .select(col("vec_id").cast("int").as("cell"), col("embedding").as("centroid"))
-        val wh = new Warehouse(spark,
+        val wh = new AtomicWarehouse(spark,
           Files.createTempDirectory(s"graft-scaleprobe-ivf-x$n-").toString)
         new graft.operators.PersistedIvf(wh)
           .buildWith(corpus, "vec_id", "embedding", cents)
@@ -397,7 +397,7 @@ object ScaleProbe {
         // written directly cell-sorted + many-row-grouped (the layout a
         // long-running stream's compaction maintains)
         val whDir = Files.createTempDirectory(s"graft-scaleprobe-sem-x$n-").toString
-        val wh = new Warehouse(spark, whDir)
+        val wh = new AtomicWarehouse(spark, whDir)
         val seed = new graft.streaming.SemanticDedupStream(wh, minCosine = 0.8)
         seed.init(cents)
         val assigned = graft.operators.Similarity.assignCells(
@@ -408,7 +408,7 @@ object ScaleProbe {
         var acrossModes = Set.empty[Long]
         Seq(("sem_probe", 1000), ("sem_fullscan", 0)).foreach { case (mode, lim) =>
           val sd = new graft.streaming.SemanticDedupStream(
-            new Warehouse(spark, cloneDir(whDir)), minCosine = 0.8,
+            new AtomicWarehouse(spark, cloneDir(whDir)), minCosine = 0.8,
             probeCellLimit = lim)
           sd.index().count() // warm page cache; the measured rep follows
           bytesRead.set(0); recordsRead.set(0)
@@ -464,7 +464,7 @@ object ScaleProbe {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val nDocs = corpus.count()
         val whDir = Files.createTempDirectory(s"graft-scaleprobe-fts-x$n-").toString
-        val wh = new Warehouse(spark, whDir)
+        val wh = new AtomicWarehouse(spark, whDir)
         val fts = new graft.operators.PersistedPostings(wh)
         fts.build(corpus, "doc_id", "text")
         // the raw corpus as a table too, so fts_inline's scan is measured
@@ -541,7 +541,7 @@ object ScaleProbe {
         // irrelevant (a full build at 10M nodes is the thing the
         // incremental path exists to avoid)
         val whDir = Files.createTempDirectory(s"graft-scaleprobe-cc-x$n-").toString
-        val wh = new Warehouse(spark, whDir)
+        val wh = new AtomicWarehouse(spark, whDir)
         val cc0 = new graft.operators.PersistedComponents(wh)
         val state = spark.range(maxNode)
           .selectExpr("id", "(id div 10) * 10 AS comp")
@@ -569,7 +569,7 @@ object ScaleProbe {
             if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
           }
           val cc = new graft.operators.PersistedComponents(
-            new Warehouse(spark, dst.toString), probeIdLimit = lim)
+            new AtomicWarehouse(spark, dst.toString), probeIdLimit = lim)
           val batch = spark.createDataFrame(batchEdges(maxNode), pairSchema)
           bytesRead.set(0); recordsRead.set(0)
           val t0 = System.nanoTime()

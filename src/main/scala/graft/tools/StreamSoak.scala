@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * (content-hash first-arrival-wins dedup, `target/streamsoak_exact.json`);
   * `lsh_bloom`/`exact_bloom` force the respective stream's Bloom routing on
   * from the first batch, so the soak also proves bloom-STATE maintenance
-  * (bootstrap, per-batch merge, saturation rebuild, atomic write order)
+  * (bootstrap, per-batch merge, saturation rebuild, same-commit update)
   * stays flat over a stream lifetime. `sem` soaks
   * [[graft.streaming.SemanticDedupStream]] and `ivf` soaks
   * [[graft.streaming.IvfStream]] — one dim-rotated embeddings replica per

@@ -7,15 +7,15 @@ import graft.model.Schemas.FileStatus
 import graft.operators.Dedup
 import graft.sources.{AtomicWarehouse, CsvSource, Warehouse}
 import graft.streaming.DedupStream
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** The transactional warehouse's contract: a group of writes inside
   * `atomically` is all-or-nothing across tables, readers inside the
   * transaction see its staged writes, readers outside never see a partial
-  * batch — and the engine code (Pipeline EP1, DedupStream) picks this up
-  * through the `Warehouse.atomically` seam with zero operator changes.
+  * batch — and the engine's operators (Pipeline EP1, DedupStream) declare
+  * their batches through `Warehouse.atomically` (CrashConsistencySpec
+  * crashes them mid-transaction).
   */
 class AtomicWarehouseSpec extends SparkSpec {
   import spark.implicits._
@@ -88,71 +88,62 @@ class AtomicWarehouseSpec extends SparkSpec {
         |Aceite Capullo 500ml *,07/03/2025,Vicente,1.347,,,,
         |Arroz Premium 1kg x 12,07/03/2025,DosPinos,2.500,,,,
         |""".stripMargin
+    val secondCsv = sampleCsv + "Queso Tierno 400g,1/07/2025,Serrano ,1.800,,,,\n"
+    val dims = Seq(
+      "dims/UnitOfMeasure" -> Schemas.unitOfMeasure,
+      "dims/Provider" -> Schemas.provider,
+      "dims/Product" -> Schemas.product,
+      "dims/Provider_Product" -> Schemas.providerProduct)
     def dimState(wh: Warehouse) = (
       wh.read("dims/Provider", Schemas.provider).collect().map(_.getString(1)).sorted.toSeq,
       wh.read("dims/Product", Schemas.product).collect().map(_.getString(2)).sorted.toSeq,
-      wh.read("dims/Provider_Product", Schemas.providerProduct).count())
+      wh.read("dims/Provider_Product", Schemas.providerProduct).count(),
+      wh.read("dims/UnitOfMeasure", Schemas.unitOfMeasure).collect().map(_.getString(1)).sorted.toSeq)
 
-    // seam proof: identical dims through the transactional warehouse
-    val base = new Warehouse(spark, Files.createTempDirectory("graft-aw-ep1b-").toString)
-    assert(new Pipeline(spark, base)
-      .processCsv(CsvSource.readString(spark, sampleCsv), "products", "l.csv").status)
+    // reference: the first file through a fresh AtomicWarehouse
     val aw = new AtomicWarehouse(spark, Files.createTempDirectory("graft-aw-ep1a-").toString)
     val p = new Pipeline(spark, aw)
     assert(p.processCsv(CsvSource.readString(spark, sampleCsv), "products", "l.csv").status)
-    assert(dimState(aw) == dimState(base))
-    val want = dimState(aw)
+    val afterFirst = dimState(aw)
 
-    // crash mid-merge (3rd of 4 dim replaces dies): with the base warehouse
-    // this leaves partially-merged dims (CrashConsistencySpec); with the
-    // atomic warehouse EVERY dim stays at its pre-batch snapshot
-    class CrashingAw(dir: String) extends AtomicWarehouse(spark, dir) {
-      @volatile var armed = false
-      override def atomically(fn: Warehouse => Unit): Unit =
-        super.atomically { w =>
-          fn(new Warehouse(spark, root) {
-            override def read(t: String, s: StructType): DataFrame = w.read(t, s)
-            override def append(t: String, df: DataFrame): Unit = w.append(t, df)
-            override def replace(t: String, df: DataFrame): Unit = {
-              if (armed && t == "dims/Product")
-                throw new java.io.IOException("injected crash")
-              w.replace(t, df)
-            }
-            override def delete(t: String): Unit = w.delete(t)
-            override def exists(t: String): Boolean = w.exists(t)
-          })
-        }
-    }
-    val failing = new CrashingAw(Files.createTempDirectory("graft-aw-ep1c-").toString)
-    val p2 = new Pipeline(spark, failing)
-    assert(p2.processCsv(CsvSource.readString(spark, sampleCsv), "products", "l.csv").status)
-    failing.armed = true
-    val secondCsv = sampleCsv + "Queso Tierno 400g,1/07/2025,Serrano ,1.800,,,,\n"
+    // "base": the same dims laid the way the former base writer left them —
+    // plain parquet directories, no manifest history
+    val based = new CrashingWarehouse(spark, Files.createTempDirectory("graft-aw-ep1b-").toString)
+    dims.foreach { case (t, s) => aw.read(t, s).write.parquet(based.path(t)) }
+    assert(dimState(based) == afterFirst)
+
+    // crash mid-merge on the first transactional write, the one that adopts
+    // the raw dims: the rolled-back batch publishes nothing and keeps every
+    // raw row readable
+    val p2 = new Pipeline(spark, based)
+    based.failOn = Some("dims/Product")
     val crashed = p2.processCsv(CsvSource.readString(spark, secondCsv), "products", "l2.csv")
     assert(!crashed.status && crashed.message.contains("injected crash"))
     assert(p2.ledger.statusOf("products", "l2.csv") == FileStatus.Failed)
-    // NO partial merge: all dims exactly as after the first batch
-    assert(dimState(failing) == want)
-    // recovery: plain re-run converges, same as the base contract
-    failing.armed = false
+    assert(dimState(based) == afterFirst)
+
+    // recovery: a plain re-run reaches the same end state as the
+    // fresh-warehouse run of the same file
+    based.failOn = None
     assert(p2.processCsv(CsvSource.readString(spark, secondCsv), "products", "l2.csv").status)
+    assert(p.processCsv(CsvSource.readString(spark, secondCsv), "products", "l2.csv").status)
+    assert(dimState(based) != afterFirst)
+    assert(dimState(based) == dimState(aw))
     // the merge layer preserves the reference's trailing-space provider text
-    assert(dimState(failing)._1.exists(_.trim == "Serrano"))
+    assert(dimState(based)._1.exists(_.trim == "Serrano"))
   }
 
-  test("DedupStream batches on AtomicWarehouse equal the base-warehouse run") {
+  test("DedupStream batches on AtomicWarehouse equal the from-scratch pair set") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select($"doc_id".cast("long").as("doc_id"), $"text")
       .orderBy("doc_id").limit(90).as[(Long, String)].collect()
 
-    def drive(wh: Warehouse): Set[(Long, Long, Double)] = {
-      val ds = new DedupStream(wh, minJaccard = 0.35, minSigMatchesOverride = 4)
-      docs.grouped(30).foreach(c => ds.processBatch(c.toSeq.toDF("doc_id", "text")))
-      ds.pairs().collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    }
-    val basePairs = drive(new Warehouse(spark, Files.createTempDirectory("graft-aw-dsb-").toString))
-    val awPairs = drive(new AtomicWarehouse(spark, Files.createTempDirectory("graft-aw-dsa-").toString))
-    assert(awPairs == basePairs && awPairs.nonEmpty)
+    val ds = new DedupStream(new AtomicWarehouse(spark,
+      Files.createTempDirectory("graft-aw-dsa-").toString),
+      minJaccard = 0.35, minSigMatchesOverride = 4)
+    docs.grouped(30).foreach(c => ds.processBatch(c.toSeq.toDF("doc_id", "text")))
+    val awPairs = ds.pairs().collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(awPairs.nonEmpty)
     assert(awPairs == Dedup.lshVerifiedPairs(docs.toSeq.toDF("doc_id", "text"), "doc_id", "text",
         minJaccard = 0.35, minSigMatchesOverride = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.model.Schemas
-import graft.sources.{CsvSource, GraftBlobFileSystem, JdbcSink, Warehouse}
+import graft.sources.{AtomicWarehouse, CsvSource, GraftBlobFileSystem, JdbcSink}
 
 /** Proof-of-seam for SURVEY §7's "storage is a connector detail" stance:
   * the engine runs unchanged against a different storage scheme, and
@@ -16,7 +16,7 @@ class ConnectorSpec extends SparkSpec {
   test("object-store-style scheme: EP1 runs end-to-end on a graftblob:// warehouse") {
     GraftBlobFileSystem.install(spark)
     val dir = Files.createTempDirectory("graft-blobwh-").toString
-    val wh = new Warehouse(spark, s"graftblob:$dir")
+    val wh = new AtomicWarehouse(spark, s"graftblob:$dir")
     val p = new Pipeline(spark, wh)
     val csv =
       """Producto,Fecha 1,Provedor,Precio,,,,

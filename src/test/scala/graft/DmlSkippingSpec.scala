@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.{AtomicWarehouse, ColEq, ColGe, ColGt, ColLe, ColLt, FilePred, Warehouse}
+import graft.sources.{AtomicWarehouse, ColEq, ColGe, ColGt, ColLe, ColLt, FilePred}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType, TimestampType}
 
@@ -163,8 +163,7 @@ class DmlSkippingSpec extends SparkSpec {
 
   test("deleteWhere adopts a raw directory-laid table before removing") {
     val root = Files.createTempDirectory("graft-dmlraw-").toString
-    val base = new Warehouse(spark, root)
-    base.append("raw", Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v").coalesce(1))
+    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v").coalesce(1).write.parquet(s"$root/raw")
     val wh = new AtomicWarehouse(spark, root)
     val deleted = wh.deleteWhere("raw", kv, Seq(ColEq("id", 2L)))
     assert(deleted == 1L)
@@ -239,7 +238,7 @@ class DmlSkippingSpec extends SparkSpec {
     assert(k.min.contains(0L) && k.max.contains(29L) && k.filesRead == 0 && k.filesMetadata == 3)
     // statless legacy file → hybrid: that file read, result still exact
     val root = java.nio.file.Files.createTempDirectory("graft-mmraw-").toString
-    new Warehouse(spark, root).append("h", Seq((100L, "z")).toDF("id", "v").coalesce(1))
+    Seq((100L, "z")).toDF("id", "v").coalesce(1).write.parquet(s"$root/h")
     val wh2 = new AtomicWarehouse(spark, root)
     wh2.append("h", Seq((1L, "a")).toDF("id", "v").coalesce(1)) // adopts; adopted file gets stats too
     val h = wh2.statsMinMax("h", kv, "id")
@@ -639,7 +638,7 @@ class DmlSkippingSpec extends SparkSpec {
       d.clusterCols == Seq("id") && d.schemaWidth == 2 && d.bytes > 0, s"got $d")
     // a statless legacy file degrades rows to -1, never to a guess
     val root = java.nio.file.Files.createTempDirectory("graft-desc-").toString
-    new Warehouse(spark, root).append("h", Seq((1L, "a")).toDF("id", "v").coalesce(1))
+    Seq((1L, "a")).toDF("id", "v").coalesce(1).write.parquet(s"$root/h")
     val wh2 = new AtomicWarehouse(spark, root)
     wh2.append("h", Seq((2L, "b")).toDF("id", "v").coalesce(1)) // adoption stats cover both
     val d2 = wh2.describe("h")

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.operators.Dedup
-import graft.sources.{AtomicWarehouse, Warehouse}
+import graft.sources.AtomicWarehouse
 import graft.streaming.ExactDedupStream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -63,7 +63,7 @@ class ExactDedupStreamSpec extends SparkSpec {
       Seq(d.filter($"doc_id" > cut), d.filter($"doc_id" <= cut))) // reversed halves
     val runs = batchings.map { parts =>
       val xs = new ExactDedupStream(
-        new Warehouse(spark, Files.createTempDirectory("graft-xstream-inv-").toString))
+        new AtomicWarehouse(spark, Files.createTempDirectory("graft-xstream-inv-").toString))
       parts.foreach(xs.processBatch) // the exact code path foreachBatch drives
       (xs.survivors()
         .select(coalesce(sha2($"text", 256), lit("__null_text__")).as("s"))
@@ -90,13 +90,13 @@ class ExactDedupStreamSpec extends SparkSpec {
     assert(xs.survivors().count() == first.size, "no duplicate admit rows")
   }
 
-  test("crash mid-admit: atomic replays exactly-once; base partial admit keeps the survivor SET") {
+  test("crash mid-admit: the replay admits exactly once") {
     val b = docs.filter($"doc_id" < 30)
     val winners = Dedup.exactDedup(b, "doc_id", "text")
     val expected = winners.collect().map(r => (r.getLong(0), Option(r.getString(1)))).toSet
 
-    // AtomicWarehouse: a crash between the corpus and index appends leaves
-    // NOTHING visible, so replay admits cleanly, exactly once
+    // a crash between the corpus and index appends leaves NOTHING visible,
+    // so replay admits cleanly, exactly once
     val awh = new AtomicWarehouse(spark,
       Files.createTempDirectory("graft-xstream-crash-a-").toString)
     val xs = new ExactDedupStream(awh)
@@ -110,19 +110,10 @@ class ExactDedupStreamSpec extends SparkSpec {
     xs.processBatch(b)
     assert(survivorSet(xs) == expected)
     assert(xs.survivors().count() == expected.size)
-
-    // Base warehouse: the crash can land the survivors WITHOUT their hashes;
-    // replay then re-admits (duplicate corpus rows) but the survivor SET is
-    // unchanged, and the replayed hashes still reject later copies
-    val bwh = new Warehouse(spark,
-      Files.createTempDirectory("graft-xstream-crash-b-").toString)
-    val ys = new ExactDedupStream(bwh)
-    bwh.append(ys.corpusTable, winners) // the partial admit the crash left
-    ys.processBatch(b) // replay
-    assert(survivorSet(ys) == expected, "survivor SET must survive a partial-admit replay")
+    // the replayed hashes still reject later copies
     val copies = b.select(($"doc_id" + 100000).as("doc_id"), $"text")
-    ys.processBatch(copies)
-    assert(survivorSet(ys) == expected, "replayed hashes must reject later copies")
+    xs.processBatch(copies)
+    assert(survivorSet(xs) == expected, "replayed hashes must reject later copies")
   }
 
   test("bloom routing: survivors identical to the plain path, state persists across instances") {

@@ -46,7 +46,7 @@ class LayoutSpec extends SparkSpec {
   test("partitioned warehouse read prunes partitions at planning time") {
     // the Warehouse.appendPartitioned scaladoc's claim, held here: a filter
     // on the partition column never lists the other partitions into the scan
-    val wh = new graft.sources.Warehouse(spark,
+    val wh = new graft.sources.AtomicWarehouse(spark,
       java.nio.file.Files.createTempDirectory("graft-layout-part-").toString)
     val df = (0L until 300L).map(i => (i, s"src${i % 3}", s"payload$i"))
       .toDF("id", "source", "payload")

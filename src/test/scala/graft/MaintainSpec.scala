@@ -223,12 +223,18 @@ class MaintainSpec extends SparkSpec {
   }
 
   test("maintain on a base warehouse: discovery path compacts everything") {
-    val dir = Files.createTempDirectory("graft-maint-base-").toString
-    val wh = new Warehouse(spark, dir)
-    (1 to 5).foreach(i => wh.append("t", Seq((i.toLong, s"v$i")).toDF("id", "v")))
+    // a base warehouse: tables laid by plain parquet writes, no manifest
+    // history — the first rewrite brings each under the manifest
+    val dir = Files.createTempDirectory("graft-maint-raw-").toString
+    (1 to 5).foreach(i => Seq((i.toLong, s"v$i")).toDF("id", "v")
+      .write.mode("append").parquet(s"$dir/t"))
+    val wh = new AtomicWarehouse(spark, dir)
     val before = rows(wh, "t")
-    Maintain.run(spark, dir, Nil) // no table specs: discover
-    assert(rows(wh, "t") == before)
-    assert(parquetFiles(s"$dir/t").size == 1)
+    assert(before.size == 5 && parquetFiles(s"$dir/t").size == 5)
+    Maintain.run(spark, dir, Nil, graceMs = 0L) // no table specs: discover
+    val after = new AtomicWarehouse(spark, dir)
+    assert(rows(after, "t") == before)
+    assert(after.visibleFileCount("t") == 1, "the compacted table is now manifest-tracked")
+    assert(parquetFiles(s"$dir/t").size == 1, "vacuum collected the raw files")
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.model.Schemas
 import graft.operators.Canonicalize
-import graft.sources.{CsvSource, InvoiceExtractor, Warehouse}
+import graft.sources.{AtomicWarehouse, CsvSource, InvoiceExtractor}
 import org.apache.spark.sql.functions._
 
 /** Component/integration tier (reference tier-2, SURVEY.md §5): full EP1-EP4
@@ -16,7 +16,7 @@ class PipelineSpec extends SparkSpec {
 
   private def freshPipeline(): Pipeline = {
     val dir = Files.createTempDirectory("graft-wh-").toString
-    new Pipeline(spark, new Warehouse(spark, dir))
+    new Pipeline(spark, new AtomicWarehouse(spark, dir))
   }
 
   private val sampleCsv =

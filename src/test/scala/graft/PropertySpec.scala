@@ -242,7 +242,7 @@ class PropertySpec extends SparkSpec {
       val pairs = edges.toDF("id_a", "id_b")
       val want = Dedup.connectedComponents(pairs).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val cc = new PersistedComponents(new graft.sources.Warehouse(spark,
+      val cc = new PersistedComponents(new graft.sources.AtomicWarehouse(spark,
         java.nio.file.Files.createTempDirectory(s"graft-ccprop-$i-").toString))
       // deterministic round-robin batching of the generated edge list
       val batches = edges.zipWithIndex.groupBy(_._2 % nBatches).toSeq.sortBy(_._1)

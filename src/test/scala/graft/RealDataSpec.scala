@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.model.Schemas
-import graft.sources.{CsvSource, Warehouse}
+import graft.sources.{AtomicWarehouse, CsvSource}
 import org.apache.spark.sql.functions._
 
 /** End-to-end run over the reference's real price list
@@ -19,7 +19,7 @@ class RealDataSpec extends SparkSpec {
 
   test("full pipeline over Lista Precios.csv reproduces the reference end-state") {
     assume(available, s"$realCsv not present")
-    val wh = new Warehouse(spark, Files.createTempDirectory("graft-real-").toString)
+    val wh = new AtomicWarehouse(spark, Files.createTempDirectory("graft-real-").toString)
     val p = new Pipeline(spark, wh)
 
     // 1468 data rows: wc -l reports 1468 NEWLINES incl. header, but the last
